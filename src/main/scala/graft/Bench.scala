@@ -206,7 +206,7 @@ object Bench {
         val status = if (rc == 0) "ok" else "violations"
         s"""{"status":"$status","violations":${viol.map(jstr).mkString("[", ",", "]")},"aggregate_vs_pins":$agg}"""
     }
-    val benchJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"protocol":"$protocol","failed":$failedJson,"baseline_gate":$gateJson,"sf":"$sfDir"}"""
+    val benchJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"protocol":${jstr(protocol)},"failed":$failedJson,"baseline_gate":$gateJson,"sf":${jstr(sfDir)}}"""
     println(benchJson)
     // Persist the full line to tools/bench_local/: the driver's artifact
     // keeps only the tail ~2 KB of bench stdout, which drops the per-query
@@ -259,7 +259,9 @@ object Bench {
       case Some((viol, rc, agg)) =>
         s"""{"status":"${if (rc == 0) "ok" else "violations"}","n_violations":${viol.size},"aggregate_vs_pins":$agg}"""
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"protocol":"$protocol","baseline_gate":$summaryGate,"sf":"$sfDir","cpus":$cpus}""")
+    // a SPARK_GRAFT_ONLY run's total covers only the selected queries
+    val partial = if (only.isDefined) ""","partial":true""" else ""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"protocol":${jstr(protocol)},"baseline_gate":$summaryGate,"sf":${jstr(sfDir)},"cpus":$cpus$partial}""")
     spark.stop()
     gateResult.map(_._2).filter(_ != 0).foreach(_ => sys.exit(1))
   }

@@ -224,25 +224,13 @@ object Layout {
     * (2) anti-join ONLY those partitions against the victim ids into a
     * staging dir (suffixed with the Spark application id, so two
     * concurrent deletes on one layout cannot collide on staging paths);
-    * (3) swap each affected partition directory via a trash-ordered
-    * rename pair — live→trash, fresh→live, then drop trash. The real
-    * guarantee: readers NEVER see a torn/mixed directory (renames are
-    * atomic per directory on HDFS; object stores substitute their own
-    * atomic-commit layer), but a crash in the window between the two
-    * renames leaves the partition temporarily ABSENT — old data intact
-    * in `.trash_delete_*`, new data in staging, recoverable by restoring
-    * either; it is never silently lost. Every rename return value is
-    * CHECKED and a failure throws: this is a takedown /
-    * right-to-be-forgotten primitive, and a silently-lost rename here
-    * means silently-lost surviving rows. Post-swap, a failed TRASH
-    * delete also throws — the trash directory still contains the victim
-    * rows, so "success" with trash left behind would mean the data
-    * subject's rows silently persist on disk. Only the STAGING cleanup
-    * (surviving-row copies, no victim data) downgrades to a warning.
-    * Untouched
-    * partitions' files are never opened, listed into a job, or
-    * rewritten — the query's gate checks their file listing is
-    * byte-identical. Returns the affected partition values. */
+    * (3) swap each affected partition directory through
+    * [[StagedSwap.replace]] — a partition whose every row was a victim
+    * stages nothing and is removed. Its trash holds the victim rows, so
+    * a failed trash cleanup throws. Untouched partitions' files are
+    * never opened, listed into a job, or rewritten — the query's gate
+    * checks their file listing is byte-identical. Returns the affected
+    * partition values. */
   def deleteRows(spark: SparkSession, layoutPath: String, ids: DataFrame,
       idCol: String, partCol: String = "event_date"): Seq[String] = {
     val layout = spark.read.parquet(layoutPath)
@@ -255,44 +243,8 @@ object Layout {
       layout.where(col(partCol).cast("string").isin(affected: _*))
         .join(ids, Seq(idCol), "left_anti")
         .write.mode("overwrite").partitionBy(partCol).parquet(staging)
-      val root = new org.apache.hadoop.fs.Path(layoutPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"deleteRows: rename $src -> $dst failed")
-      affected.foreach { v =>
-        val live = new org.apache.hadoop.fs.Path(root, s"$partCol=$v")
-        val fresh = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(staging), s"$partCol=$v")
-        val trash = new org.apache.hadoop.fs.Path(root,
-          s".trash_delete_${token}_$partCol=$v")
-        move(live, trash)
-        // a partition whose EVERY row was a victim stages no directory
-        // at all (partitionBy emits nothing for zero rows): the correct
-        // end-state is the partition REMOVED, not a thrown half-swap
-        // that strands the old data in trash while later retries see
-        // nothing left to delete
-        if (fs.exists(fresh)) move(fresh, live)
-        else System.err.println(s"[layout] NOTE deleteRows: every row of " +
-          s"$partCol=$v was deleted — partition removed")
-        // trash still CONTAINS the victim rows — for a takedown /
-        // right-to-be-forgotten primitive a failed trash delete means
-        // the data subject's rows persist on disk, so it throws (unlike
-        // IvfIndex.compactPostings, whose trash holds only redundant
-        // copies and warns). The swap itself is complete at this point:
-        // the thrown path leaves live data correct and the leftover
-        // trash path named in the error for the operator to remove.
-        if (!fs.delete(trash, true))
-          throw new java.io.IOException(
-            s"deleteRows: swap complete but cleanup of $trash FAILED — deleted rows still on disk at that path; remove it manually")
-      }
-      if (!fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-        System.err.println(s"[layout] WARN deleteRows: cleanup of $staging failed (swap complete; leftover staging only)")
-      // the swap bypassed Spark's write path, so the session's file-
-      // status cache may still hold the replaced partitions' listings —
-      // a later same-session read of an affected path would die on the
-      // renamed-away files (normal writes refresh this themselves)
-      spark.catalog.refreshByPath(layoutPath)
+      StagedSwap.replacePartitions(spark, layoutPath, partCol, affected,
+        staging, "delete", trashHoldsVictims = true, op = "deleteRows")
     }
     affected
   }

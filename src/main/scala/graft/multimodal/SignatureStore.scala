@@ -201,11 +201,9 @@ object SignatureStore {
     * (exact duplicate rows collapse — append idempotence is restored
     * here, not promised per-call), and rewritten; the file census is a
     * driver listing bounded by the 3 kinds, and untouched kinds' files
-    * are never opened or listed into a job. Per-directory swap uses the
-    * same checked trash-ordered rename pair as the IVF compactor (no
-    * torn directory ever; a crash between the renames leaves the kind
-    * temporarily absent with data recoverable from trash/staging; trash
-    * here holds only redundant copies, so its cleanup failure warns).
+    * are never opened or listed into a job. Each kind directory swaps
+    * through [[graft.io.StagedSwap.replace]] (trash here holds only
+    * redundant copies, so its cleanup failure warns).
     * Novelty results are identical before/after by construction (gated
     * in multimodal_signature_store). Returns the compacted kinds. */
   def compact(spark: SparkSession, dir: String,
@@ -236,23 +234,9 @@ object SignatureStore {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("kind")
       .parquet(staging)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"SignatureStore.compact: rename $src -> $dst failed")
-    victims.foreach { v =>
-      val live = new org.apache.hadoop.fs.Path(root, s"kind=$v")
-      val fresh = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(staging), s"kind=$v")
-      val trash = new org.apache.hadoop.fs.Path(root, s".trash_compact_${token}_kind=$v")
-      move(live, trash)
-      move(fresh, live)
-      if (!fs.delete(trash, true))
-        System.err.println(s"[sigstore] WARN compact: cleanup of $trash failed (swap complete; leftover trash only)")
-    }
-    if (!fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-      System.err.println(s"[sigstore] WARN compact: cleanup of $staging failed (swap complete; leftover staging only)")
+    graft.io.StagedSwap.replacePartitions(spark, dir, "kind", victims,
+      staging, "compact", trashHoldsVictims = false,
+      op = "SignatureStore.compact")
     victims
   }
 
@@ -260,10 +244,11 @@ object SignatureStore {
     * (right-to-be-forgotten), its SIGNATURES must go too, or novelty
     * keeps suppressing look-alikes of content the corpus no longer
     * holds. Kind-partitioned rewrite of only the kinds holding victim
-    * rows, same checked-swap discipline as [[compact]]; throws on any
-    * failed rename AND on failed trash cleanup (trash holds the victim
-    * signatures — same takedown semantics as
-    * [[graft.io.Layout.deleteRows]]). Returns the kinds rewritten. */
+    * rows, swapped like [[compact]]; a kind whose EVERY signature was a
+    * victim stages nothing and is removed (the explicit-schema load
+    * handles it). Trash holds the victim signatures, so a failed trash
+    * cleanup throws (the [[graft.io.Layout.deleteRows]] takedown
+    * semantics). Returns the kinds rewritten. */
   def deleteSignatures(spark: SparkSession, dir: String,
       ids: DataFrame): Seq[String] = {
     val idFrame = ids.select(col(ids.columns.head).cast("long").as("media_id"))
@@ -277,26 +262,9 @@ object SignatureStore {
       .join(idFrame, Seq("media_id"), "left_anti")
       .repartition(col("kind"))
       .write.mode("overwrite").partitionBy("kind").parquet(staging)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"SignatureStore.deleteSignatures: rename $src -> $dst failed")
-    affected.foreach { v =>
-      val live = new org.apache.hadoop.fs.Path(root, s"kind=$v")
-      val fresh = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(staging), s"kind=$v")
-      val trash = new org.apache.hadoop.fs.Path(root, s".trash_delete_${token}_kind=$v")
-      move(live, trash)
-      // a kind whose EVERY signature was a victim has no staging dir —
-      // the kind simply ceases to exist (explicit-schema load handles it)
-      if (fs.exists(fresh)) move(fresh, live)
-      if (!fs.delete(trash, true))
-        throw new java.io.IOException(
-          s"deleteSignatures: swap complete but cleanup of $trash FAILED — deleted signatures still on disk at that path; remove it manually")
-    }
-    if (!fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-      System.err.println(s"[sigstore] WARN deleteSignatures: cleanup of $staging failed (swap complete; survivor copies only)")
+    graft.io.StagedSwap.replacePartitions(spark, dir, "kind", affected,
+      staging, "delete", trashHoldsVictims = true,
+      op = "SignatureStore.deleteSignatures")
     affected
   }
 

@@ -339,11 +339,9 @@ object IvfIndex {
     * job, or touched (pinned byte-identical in IvfIndexSpec). Rewritten
     * cells use the same salted clustering as the layout compactor (hot
     * cells compact across multiple tasks; files bounded by
-    * saltBuckets · maxRecordsPerFile) and swap per-directory via the
-    * checked trash-ordered rename pair (same contract as
-    * [[graft.io.Layout.deleteRows]]: no torn/mixed directory ever; a
-    * crash between the two renames leaves the cell temporarily absent
-    * with data recoverable from trash/staging). Exact-duplicate rows
+    * saltBuckets · maxRecordsPerFile) and swap per-directory through
+    * [[graft.io.StagedSwap.replace]] (trash holds only redundant
+    * copies, so its cleanup failure warns). Exact-duplicate rows
     * (a retried append's state) collapse during the rewrite — append
     * idempotence is restored here, the [[graft.multimodal
     * .SignatureStore.compact]] contract. Search results are
@@ -393,27 +391,8 @@ object IvfIndex {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("cell")
       .parquet(staging)
-    val root = new org.apache.hadoop.fs.Path(postings)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compactPostings: rename $src -> $dst failed")
-    victims.foreach { v =>
-      val live = new org.apache.hadoop.fs.Path(root, s"cell=$v")
-      val fresh = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(staging), s"cell=$v")
-      val trash = new org.apache.hadoop.fs.Path(root, s".trash_compact_${token}_cell=$v")
-      move(live, trash)
-      move(fresh, live)
-      if (!fs.delete(trash, true))
-        System.err.println(s"[ivf] WARN compactPostings: cleanup of $trash failed (swap complete; leftover trash only)")
-    }
-    if (!fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-      System.err.println(s"[ivf] WARN compactPostings: cleanup of $staging failed (swap complete; leftover staging only)")
-    // the swaps bypassed Spark's write path — drop stale session
-    // listings/caches over the rewritten cells (the Layout.deleteRows
-    // lesson; deleteVectors inherits the refresh from deleteRows)
-    spark.catalog.refreshByPath(postings)
+    graft.io.StagedSwap.replacePartitions(spark, postings, "cell", victims,
+      staging, "compact", trashHoldsVictims = false, op = "compactPostings")
     victims
   }
 
@@ -520,18 +499,15 @@ object IvfIndex {
     * through [[trainCenters]]' usual holdout discipline; assignment
     * always covers ALL vectors.
     *
-    * Crash safety (the [[compactPostings]] trash-ordered discipline,
-    * whole-store scope): all four components (centers, postings,
-    * drift_ref, quantizer header) are STAGED completely, then a
-    * `rebuild.inprogress` marker lands (tmp+rename), then each
-    * component swaps live → trash, staged → live, then the old drift
-    * LOG is trashed (its rows reference the retired drift reference;
-    * post-rebuild appends restart the log under the new one), then
-    * trash + staging + marker are removed. Every reader throws while
-    * the marker exists ([[requireNoPendingRebuild]]), and re-running
-    * rebuild() first completes a pending swap from the still-complete
-    * staging (roll-forward), so no mixed-generation store is ever
-    * probed. Returns the new centers. */
+    * Crash safety, whole-store scope: all components (centers,
+    * postings, drift_ref, PQ sidecar, quantizer header) are STAGED
+    * completely under a `rebuild.inprogress` marker and swapped by
+    * [[graft.io.StagedSwap.rollForward]], which also retires the old
+    * drift LOG (its rows reference the retired drift reference;
+    * post-rebuild appends restart the log under the new one). Every
+    * reader throws while the marker exists ([[requireNoPendingRebuild]]),
+    * and re-running rebuild() first completes a pending swap, so no
+    * mixed-generation store is ever probed. Returns the new centers. */
   def rebuild(spark: SparkSession, dir: String, newNlist: Int,
       iters: Int = 10, trainFraction: Double = 1.0): Array[Array[Double]] = {
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -693,48 +669,29 @@ object IvfIndex {
     centers
   }
 
-  /** Roll a pending rebuild forward: swap every staged component into
-    * place (idempotent per component), trash the retired drift log,
-    * then clean trash, staging, and the marker. Safe at any crash
-    * point after the marker landed — staging is complete by then. */
+  /** Roll a pending rebuild forward ([[graft.io.StagedSwap.rollForward]]).
+    * Safe at any crash point after the marker landed — staging is
+    * complete by then. */
   private def completePendingRebuild(spark: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!hfs.rename(src, dst))
-        throw new java.io.IOException(s"rebuild: rename $src -> $dst failed")
-    RebuildComponents.foreach { name =>
-      val staged = p(s"$dir/$RebuildStaging/$name")
-      val live = p(s"$dir/$name")
-      val trash = p(s"$dir/.trash_rebuild_$name")
-      if (hfs.exists(staged)) {
-        if (hfs.exists(live)) {
-          if (hfs.exists(trash)) hfs.delete(trash, true) // stale from an earlier crash window
-          move(live, trash)
-        }
-        move(staged, live)
-      } // else: this component's swap already completed
-    }
+    val parts = RebuildComponents.map(n => graft.io.StagedSwap.Part(
+      live = p(s"$dir/$n"), staged = p(s"$dir/$RebuildStaging/$n"),
+      trash = p(s"$dir/.trash_rebuild_$n")))
     // the old drift LOG references the retired drift reference —
     // post-rebuild appends restart the log against the new one. Mid-
     // rebuild there is no concurrent appender (single-writer contract),
     // so any log present here is pre-rebuild.
-    val log = p(s"$dir/drift_log.parquet")
-    if (hfs.exists(log)) move(log, p(s"$dir/.trash_rebuild_drift_log.parquet"))
-    // cleanup LAST: trash survives until every swap landed
-    (RebuildComponents.map(n => s"$dir/.trash_rebuild_$n") ++
-      Seq(s"$dir/.trash_rebuild_drift_log.parquet", s"$dir/$RebuildStaging"))
-      .foreach { t => val tp = p(t); if (hfs.exists(tp)) hfs.delete(tp, true) }
-    if (!hfs.delete(p(s"$dir/$RebuildMarker"), false))
-      throw new java.io.IOException(s"rebuild: marker delete failed at $dir")
-    // the swaps bypassed Spark's write path, so a session-cached plan
-    // over the rewritten components would re-execute against the
-    // renamed-away files (the Layout.deleteRows lesson — SCALING.md
-    // round-18); refresh drops the stale listings + cache entries
-    (RebuildComponents.filter(_.endsWith(".parquet")).map(n => s"$dir/$n") ++
-      Seq(s"$dir/$PqDir/postings.parquet", s"$dir/$PqDir/codebooks.parquet"))
-      .foreach(spark.catalog.refreshByPath)
+    val retiredLog = (p(s"$dir/drift_log.parquet"),
+      p(s"$dir/.trash_rebuild_drift_log.parquet"))
+    graft.io.StagedSwap.rollForward(spark,
+      p(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      marker = p(s"$dir/$RebuildMarker"), staging = p(s"$dir/$RebuildStaging"),
+      parts = parts, retire = Seq(retiredLog),
+      trash = parts.map(_.trash) :+ retiredLog._2,
+      refresh = RebuildComponents.filter(_.endsWith(".parquet"))
+        .map(n => s"$dir/$n") ++
+        Seq(s"$dir/$PqDir/postings.parquet", s"$dir/$PqDir/codebooks.parquet"),
+      op = "rebuild")
   }
 
   private def writeFileAtomic(hfs: org.apache.hadoop.fs.FileSystem,
@@ -823,14 +780,14 @@ object IvfIndex {
     *
     * Crash safety (the [[rebuild]] discipline, partition scope): new
     * centers + drift reference + generation header + the rewritten
-    * victim-cell directories are all STAGED completely, then a
-    * `split.inprogress` marker lands (readers throw from then on), then
-    * each component swaps via trash-ordered renames, the drift LOG is
-    * trashed (its rows reference the retired occupancy reference —
-    * same rule as rebuild: a changed drift reference restarts the
-    * log), then trash + staging + marker are cleaned. Re-running
-    * splitCells first rolls a pending swap forward, then runs a fresh
-    * census (typically finding nothing — convergent).
+    * victim-cell directories are all STAGED completely under a
+    * `split.inprogress` marker (readers throw from then on) and
+    * swapped by [[graft.io.StagedSwap.rollForward]], which also
+    * retires the drift LOG (its rows reference the retired occupancy
+    * reference — same rule as rebuild: a changed drift reference
+    * restarts the log). Re-running splitCells first rolls a pending
+    * swap forward, then runs a fresh census (typically finding
+    * nothing — convergent).
     *
     * At most `maxSplitCells` victims are split per call, heaviest
     * first (a pass that wants to split more than that is drifting into
@@ -901,7 +858,13 @@ object IvfIndex {
       else None
     val staging = s"$dir/$SplitStaging"
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    if (hfs.exists(stagingPath)) hfs.delete(stagingPath, true) // pre-marker crash leftovers
+    // pre-marker crash leftovers must go: the victim loop's staged
+    // writes APPEND, so a surviving staging root would mix in stale rows
+    if (hfs.exists(stagingPath) && !hfs.delete(stagingPath, true))
+      throw new java.io.IOException(
+        s"splitCells: delete of stale staging $stagingPath failed")
+    require(!hfs.exists(stagingPath),
+      s"splitCells: staging $stagingPath must be absent before the staged appends")
     val newCenters = scala.collection.mutable.ArrayBuffer(oldCenters.toSeq: _*)
     val splitDone = scala.collection.mutable.ArrayBuffer.empty[Int]
     def d2(a: Seq[Double], b: Array[Double]): Double = {
@@ -1047,79 +1010,46 @@ object IvfIndex {
     splitDone.toSeq
   }
 
-  /** Roll a pending split forward: swap staged centers / drift_ref /
-    * header, then move each staged cell directory into the postings
-    * (trash-ordered; idempotent per component), trash the retired
-    * drift log, clean up, drop the marker. Safe at any crash point
-    * after the marker landed — staging is complete by then. */
+  /** Roll a pending split forward ([[graft.io.StagedSwap.rollForward]]):
+    * staged centers / drift_ref / headers, then each staged cell
+    * directory into the postings. Safe at any crash point after the
+    * marker landed — staging is complete by then. */
   private def completePendingSplit(spark: SparkSession, dir: String): Unit = {
-    val hfs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import graft.io.StagedSwap.Part
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!hfs.rename(src, dst))
-        throw new java.io.IOException(s"splitCells: rename $src -> $dst failed")
-    def swap(name: String, trashTag: String): Unit = {
-      val staged = p(s"$dir/$SplitStaging/$name")
-      val live = p(s"$dir/$name")
-      val trash = p(s"$dir/.trash_split_$trashTag")
-      if (hfs.exists(staged)) {
-        if (hfs.exists(live)) {
-          if (hfs.exists(trash)) hfs.delete(trash, true)
-          move(live, trash)
-        }
-        move(staged, live)
+    val hfs = p(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // staged cell directories (cell=<n>) still pending; a store without
+    // a sidecar staged no pq_delta
+    def cells(delta: String, livePostings: String, trashTag: String) = {
+      val root = p(s"$dir/$SplitStaging/$delta")
+      if (!hfs.exists(root)) Nil
+      else hfs.listStatus(root).filter(_.isDirectory).toSeq.map { st =>
+        val cellDir = st.getPath.getName
+        Part(live = p(s"$livePostings/$cellDir"), staged = st.getPath,
+          trash = p(s"$dir/.trash_split_$trashTag$cellDir"))
       }
     }
-    Seq("centers.parquet", "drift_ref.parquet", QuantizerFile)
-      .foreach(n => swap(n, n))
-    // sidecar header + re-encoded victim cells (exists-guarded like
-    // every component — a store without a sidecar staged neither)
-    val pqPropsStaged = p(s"$dir/$SplitStaging/pq_props")
-    if (hfs.exists(pqPropsStaged)) {
-      val live = p(s"$dir/$PqDir/$PqProps")
-      val trash = p(s"$dir/.trash_split_pq_props")
-      if (hfs.exists(live)) {
-        if (hfs.exists(trash)) hfs.delete(trash, true)
-        move(live, trash)
-      }
-      move(pqPropsStaged, live)
-    }
-    val pqDeltaRoot = p(s"$dir/$SplitStaging/pq_delta")
-    if (hfs.exists(pqDeltaRoot))
-      hfs.listStatus(pqDeltaRoot).filter(_.isDirectory).foreach { st =>
-        val cellDir = st.getPath.getName // cell=<n>
-        val live = p(s"$dir/$PqDir/postings.parquet/$cellDir")
-        val trash = p(s"$dir/.trash_split_pq_$cellDir")
-        if (hfs.exists(live)) {
-          if (hfs.exists(trash)) hfs.delete(trash, true)
-          move(live, trash)
-        }
-        move(st.getPath, live)
-      }
-    val deltaRoot = p(s"$dir/$SplitStaging/postings_delta")
-    if (hfs.exists(deltaRoot))
-      hfs.listStatus(deltaRoot).filter(_.isDirectory).foreach { st =>
-        val cellDir = st.getPath.getName // cell=<n>
-        val live = p(s"$dir/postings.parquet/$cellDir")
-        val trash = p(s"$dir/.trash_split_$cellDir")
-        if (hfs.exists(live)) {
-          if (hfs.exists(trash)) hfs.delete(trash, true)
-          move(live, trash)
-        }
-        move(st.getPath, live)
-      }
-    val log = p(s"$dir/drift_log.parquet")
-    if (hfs.exists(log)) move(log, p(s"$dir/.trash_split_drift_log.parquet"))
-    val leftovers = hfs.listStatus(p(dir))
-      .map(_.getPath.getName).filter(_.startsWith(".trash_split_"))
-    (leftovers.map(n => s"$dir/$n") :+ s"$dir/$SplitStaging")
-      .foreach { t => val tp = p(t); if (hfs.exists(tp)) hfs.delete(tp, true) }
-    if (!hfs.delete(p(s"$dir/$SplitMarker"), false))
-      throw new java.io.IOException(s"splitCells: marker delete failed at $dir")
-    (Seq("centers.parquet", "postings.parquet", "drift_ref.parquet")
-        .map(n => s"$dir/$n") :+ s"$dir/$PqDir/postings.parquet")
-      .foreach(spark.catalog.refreshByPath)
+    val parts =
+      Seq("centers.parquet", "drift_ref.parquet", QuantizerFile).map(n =>
+        Part(live = p(s"$dir/$n"), staged = p(s"$dir/$SplitStaging/$n"),
+          trash = p(s"$dir/.trash_split_$n"))) ++
+      Seq(Part(live = p(s"$dir/$PqDir/$PqProps"),
+        staged = p(s"$dir/$SplitStaging/pq_props"),
+        trash = p(s"$dir/.trash_split_pq_props"))) ++
+      cells("pq_delta", s"$dir/$PqDir/postings.parquet", "pq_") ++
+      cells("postings_delta", s"$dir/postings.parquet", "")
+    val retiredLog = (p(s"$dir/drift_log.parquet"),
+      p(s"$dir/.trash_split_drift_log.parquet"))
+    // cell trash of an earlier, crashed run has no staged part any more
+    val staleTrash = hfs.listStatus(p(dir)).map(_.getPath)
+      .filter(_.getName.startsWith(".trash_split_"))
+    graft.io.StagedSwap.rollForward(spark, hfs,
+      marker = p(s"$dir/$SplitMarker"), staging = p(s"$dir/$SplitStaging"),
+      parts = parts, retire = Seq(retiredLog),
+      trash = (parts.map(_.trash) :+ retiredLog._2) ++ staleTrash,
+      refresh = (Seq("centers.parquet", "postings.parquet", "drift_ref.parquet")
+        .map(n => s"$dir/$n") :+ s"$dir/$PqDir/postings.parquet"),
+      op = "splitCells")
   }
 
   private def nearestCellsJvm(centers: Array[Array[Double]], v: Seq[Double],

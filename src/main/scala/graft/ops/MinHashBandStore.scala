@@ -185,46 +185,42 @@ object MinHashBandStore {
   /** Collapse duplicate rows (retried appends) and many small append
     * files into one file per band partition / one sigs file set. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val stagedSigs = s"$dir/.staging_sigs"
-    val stagedBands = s"$dir/.staging_bands"
+    val stagedSigs = staged(dir, "sigs")
+    val stagedBands = staged(dir, "bands")
     loadSigs(spark, dir).distinct().coalesce(1)
       .write.mode("overwrite").parquet(stagedSigs)
     loadBands(spark, dir).distinct().repartition(col("band_id"))
       .write.mode("overwrite").partitionBy("band_id").parquet(stagedBands)
-    swap(spark, dir, stagedSigs, "sigs")
-    swap(spark, dir, stagedBands, "bands")
+    swap(spark, dir)
   }
 
   /** Takedown: remove every row of the given doc ids from both tables
-    * (staged rewrite + atomic-rename swap, the [[graft.multimodal
-    * .SignatureStore.deleteSignatures]] discipline). */
+    * (staged rewrite + [[graft.io.StagedSwap]] swap). */
   def deleteDocs(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
     val victim = ids.select(ids.columns.head).toDF("doc_id")
       .select(col("doc_id").cast("long").as("doc_id"))
-    val stagedSigs = s"$dir/.staging_sigs"
-    val stagedBands = s"$dir/.staging_bands"
+    val stagedSigs = staged(dir, "sigs")
+    val stagedBands = staged(dir, "bands")
     loadSigs(spark, dir).join(victim, Seq("doc_id"), "left_anti")
       .write.mode("overwrite").parquet(stagedSigs)
     loadBands(spark, dir).join(victim, Seq("doc_id"), "left_anti")
       .repartition(col("band_id"))
       .write.mode("overwrite").partitionBy("band_id").parquet(stagedBands)
-    swap(spark, dir, stagedSigs, "sigs")
-    swap(spark, dir, stagedBands, "bands")
+    swap(spark, dir)
   }
 
-  private def swap(spark: SparkSession, dir: String, staged: String,
-      leaf: String): Unit = {
+  private def staged(dir: String, leaf: String) = s"$dir/.staging_$leaf"
+
+  /** Swap both staged tables in ([[graft.io.StagedSwap.replace]]).
+    * Trash cleanup throws: after a takedown it holds the victims' rows. */
+  private def swap(spark: SparkSession, dir: String): Unit = {
     val (r, fs) = root(spark, dir)
-    val live = new org.apache.hadoop.fs.Path(r, leaf)
-    val trash = new org.apache.hadoop.fs.Path(r, s".trash_$leaf")
-    def move(a: org.apache.hadoop.fs.Path, b: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(a, b))
-        throw new java.io.IOException(s"MinHashBandStore: rename $a -> $b failed")
-    move(live, trash)
-    move(new org.apache.hadoop.fs.Path(staged), live)
-    if (!fs.delete(trash, true))
-      throw new java.io.IOException(
-        s"MinHashBandStore: swap complete but cleanup of $trash FAILED — remove it manually")
+    graft.io.StagedSwap.replace(spark, fs, dir,
+      Seq("sigs", "bands").map(leaf => graft.io.StagedSwap.Part(
+        live = new org.apache.hadoop.fs.Path(r, leaf),
+        staged = new org.apache.hadoop.fs.Path(staged(dir, leaf)),
+        trash = new org.apache.hadoop.fs.Path(r, s".trash_$leaf"))),
+      staging = None, trashHoldsVictims = true, op = "MinHashBandStore")
   }
 
   /** Estimated Jaccard between two equal-width signatures: fraction of

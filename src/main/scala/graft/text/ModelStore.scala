@@ -205,32 +205,22 @@ object ModelStore {
     writeAtomic(hfs, p(root, Marker), s"from_generation=$oldGen\n")
   }
 
+  /** Roll a pending retrain forward ([[graft.io.StagedSwap.rollForward]]);
+    * the retired generation waits in `_trash_gen<from_generation>/`. */
   private def completePendingRetrain(spark: SparkSession, dir: String): Unit = {
     val (hfs, root) = hfsOf(spark, dir)
-    require(hfs.exists(p(root, Marker)),
-      s"ModelStore: no pending retrain at $dir")
+    val marker = p(root, Marker)
+    require(hfs.exists(marker), s"ModelStore: no pending retrain at $dir")
     val stage = p(root, Staging)
-    val oldGen = loadProps(hfs, p(root, Marker))
+    val oldGen = loadProps(hfs, marker)
       .getProperty("from_generation", "0").toInt
     val trash = p(root, s"_trash_gen$oldGen")
-    if (hfs.exists(trash)) hfs.delete(trash, true): Unit
-    hfs.mkdirs(trash): Unit
-    Components.foreach { c =>
-      val live = p(root, c)
-      val staged = new org.apache.hadoop.fs.Path(stage, c)
-      // a retried completion may find a component already swapped —
-      // idempotent per component, forward-only
-      if (hfs.exists(staged)) {
-        if (hfs.exists(live) && !hfs.rename(live, new org.apache.hadoop.fs.Path(trash, c)))
-          throw new java.io.IOException(s"ModelStore: trash move of $c failed")
-        if (!hfs.rename(staged, live))
-          throw new java.io.IOException(s"ModelStore: swap of $c failed")
-      }
-    }
-    hfs.delete(stage, true): Unit
-    hfs.delete(trash, true): Unit
-    if (!hfs.delete(p(root, Marker), false))
-      throw new java.io.IOException(s"ModelStore: marker delete failed at $dir")
+    graft.io.StagedSwap.rollForward(spark, hfs, marker, stage,
+      parts = Components.map(c => graft.io.StagedSwap.Part(
+        live = p(root, c), staged = p(stage, c), trash = p(trash, c))),
+      retire = Nil, trash = Seq(trash),
+      refresh = Components.filter(_.endsWith(".parquet")).map(c => s"$dir/$c"),
+      op = "ModelStore")
   }
 
   private def writeAtomic(hfs: org.apache.hadoop.fs.FileSystem,
